@@ -495,8 +495,8 @@ object IvfIndex {
     VectorSearch.knnSingle(pruned, queryVec, k, embCol, idCol)
   }
 
-  /** Narrow IVF search returning only `(idCol, score)` — skips the
-    * fetch-back join when hit payloads aren't needed. */
+  /** Narrow IVF search returning only `(idCol, score)` — never reads
+    * payload columns; use it when hits are consumed as ids. */
   def searchScores(corpusWithCells: DataFrame, ivf: Ivf, queryVec: Array[Float],
                    k: Int, nprobe: Int, embCol: String = "embedding",
                    idCol: String = "doc_id"): DataFrame = {

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.operators.VectorSearch.ThresholdStats
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Progress-event emission (SURVEY §2.10 ST1): engine operators append
   * typed rows to the `events` table instead of pushing WebSocket frames
@@ -11,25 +11,34 @@ import org.apache.spark.sql.functions._
   * edge turns this table into a stream (`EventStream`). */
 object EventLog {
 
+  /** Columns of [[retrievalEvents]]: the `events` table layout. */
+  private val RetrievalEventSchema: StructType = StructType(Seq(
+    StructField("event_type", StringType),
+    StructField("ts", TimestampType, nullable = false),
+    StructField("agent_id", StringType),
+    StructField("task_id", IntegerType),
+    StructField("query_id", LongType, nullable = false),
+    StructField("data", StringType)))
+
   /** The retrieval lifecycle for one query as event rows:
-    * retrieval_start → threshold_attempt* → retrieval_complete. */
+    * retrieval_start → threshold_attempt* → retrieval_complete. Built as
+    * one local relation (a single analysis); `ts` is the time the
+    * retrieval ran, the same on every row however often the frame is
+    * read. */
   def retrievalEvents(spark: SparkSession, queryId: Long,
                       stats: ThresholdStats): DataFrame = {
-    import spark.implicits._
+    val ts = java.sql.Timestamp.from(java.time.Instant.now())
+    def event(tpe: String, data: String) = Row(tpe, ts, null, null, queryId, data)
     val rows =
-      Seq(("retrieval_start", queryId,
-        s"""{"hit_target": ${stats.hit_target}, "step": ${stats.step}}""")) ++
+      event("retrieval_start",
+        s"""{"hit_target": ${stats.hit_target}, "step": ${stats.step}}""") +:
       stats.progression.map { a =>
-        ("threshold_attempt", queryId,
+        event("threshold_attempt",
           s"""{"threshold": ${a.threshold}, "hits": ${a.hits}, "target_reached": ${a.target_reached}}""")
-      } ++
-      Seq(("retrieval_complete", queryId,
-        s"""{"final_threshold": ${stats.final_threshold}, "final_hits": ${stats.final_hits}, "attempts": ${stats.attempts}, "target_reached": ${stats.target_reached}}"""))
-    rows.toDF("event_type", "query_id", "data")
-      .withColumn("ts", current_timestamp())
-      .withColumn("agent_id", lit(null).cast("string"))
-      .withColumn("task_id", lit(null).cast("int"))
-      .select("event_type", "ts", "agent_id", "task_id", "query_id", "data")
+      } :+
+      event("retrieval_complete",
+        s"""{"final_threshold": ${stats.final_threshold}, "final_hits": ${stats.final_hits}, "attempts": ${stats.attempts}, "target_reached": ${stats.target_reached}}""")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), RetrievalEventSchema)
   }
 
   /** Append events to the events table path. */

@@ -51,12 +51,26 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("flat_l2 metric ranks by distance with 1/(1+d) similarity") {
-    val res = RagPipeline.query(spark, corpus, "vector search retrieval",
-      GraftConfig(retrieval = RetrievalConfig(topK = 5, hitTarget = 1,
-        indexType = "flat_l2")))
-    assert(res.docs.nonEmpty)
-    assert(res.docs.forall(d => d.score > 0 && d.score <= 1.0))
-    assert(res.docs.map(_.score) == res.docs.map(_.score).sorted.reverse)
+    val cfg = GraftConfig(retrieval = RetrievalConfig(topK = 4, hitTarget = 3,
+      indexType = "flat_l2"))
+    val res = RagPipeline.query(spark, corpus, "vector search retrieval", cfg)
+    val q = graft.functions.HashEmbedder.embed("vector search retrieval",
+      cfg.embedding.dimension)
+    val brute = RagPipeline.embedCorpus(corpus, dim = cfg.embedding.dimension)
+      .select("doc_id", "embedding").collect()
+      .map { r =>
+        val v = r.getSeq[Float](1)
+        val d = math.sqrt(v.indices.map { i =>
+          val x = v(i).toDouble - q(i).toDouble; x * x }.foldLeft(0.0)(_ + _))
+        (r.getLong(0), 1.0 / (1.0 + d))
+      }
+      .sortBy { case (id, s) => (-s, id) }.take(cfg.retrieval.topK).toSeq
+    val stats = graft.operators.VectorSearch.dynamicThresholdSelect(
+      brute.map(_._2), cfg.retrieval.hitTarget, cfg.retrieval.step)
+    assert(res.stats == stats)
+    assert(res.docs.map(d => (d.docId, d.score)) ==
+      brute.filter(_._2 >= stats.final_threshold))
+    assert(res.docs.nonEmpty && res.docs.forall(d => d.score > 0 && d.score <= 1.0))
   }
 
   test("dimension mismatch on pre-embedded corpus fails loudly; bad indexType rejected") {

@@ -220,14 +220,29 @@ class StreamingSpec extends AnyFunSuite {
   test("EventLog emits the retrieval lifecycle matching the stats") {
     val stats = graft.operators.VectorSearch.dynamicThresholdSelect(
       Seq(0.92, 0.87, 0.81, 0.4), hitTarget = 3, step = 0.05)
-    val ev = graft.streaming.EventLog.retrievalEvents(spark, 7L, stats).collect()
+    val frame = graft.streaming.EventLog.retrievalEvents(spark, 7L, stats)
+    val ev = frame.collect()
     assert(ev.head.getString(0) == "retrieval_start")
     assert(ev.last.getString(0) == "retrieval_complete")
     assert(ev.count(_.getString(0) == "threshold_attempt") == stats.attempts)
-    assert(ev.last.getString(5).contains("\"final_threshold\": 0.8"))
     assert(ev.forall(_.getLong(4) == 7L))
-    assert(ev.head.schema.fieldNames.toSeq ==
-      Seq("event_type", "ts", "agent_id", "task_id", "query_id", "data"))
+    import org.apache.spark.sql.types._
+    assert(frame.schema == StructType(Seq(
+      StructField("event_type", StringType, nullable = true),
+      StructField("ts", TimestampType, nullable = false),
+      StructField("agent_id", StringType, nullable = true),
+      StructField("task_id", IntegerType, nullable = true),
+      StructField("query_id", LongType, nullable = false),
+      StructField("data", StringType, nullable = true))))
+    assert(ev.forall(r => r.isNullAt(2) && r.isNullAt(3) && !r.isNullAt(1)))
+    assert(ev.head.getString(5) == """{"hit_target": 3, "step": 0.05}""")
+    assert(ev(1).getString(5) ==
+      """{"threshold": 1.0, "hits": 0, "target_reached": false}""")
+    assert(ev.last.getString(5) ==
+      """{"final_threshold": 0.8, "final_hits": 3, "attempts": 5, "target_reached": true}""")
+    // ts is when the retrieval ran: one instant on every row, every read
+    val ts = ev.map(_.getTimestamp(1)).toSeq
+    assert(ts.distinct.length == 1 && frame.collect().map(_.getTimestamp(1)).toSeq == ts)
   }
 
   test("flatMapGroupsWithState sessionization closes sessions on gap") {

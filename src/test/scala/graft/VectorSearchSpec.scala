@@ -20,8 +20,10 @@ class VectorSearchSpec extends AnyFunSuite {
 
   test("knnSingle matches brute-force scala ranking") {
     val q = randVec(999)
-    val got = VectorSearch.knnSingle(corpus, q, 5)
-      .select("doc_id").as[Long].collect().toSeq
+    val hits = VectorSearch.knnSingle(corpus.select("embedding", "doc_id"), q, 5)
+    // output contract: id first, the other corpus columns in order, then score
+    assert(hits.columns.toSeq == Seq("doc_id", "embedding", "score"))
+    val got = hits.select("doc_id").as[Long].collect().toSeq
     val expected = (0 until 100)
       .map(i => (i.toLong, randVec(i).zip(q).map { case (a, b) => a * b.toDouble }.sum))
       .sortBy { case (id, s) => (-s, id) }.take(5).map(_._1)
@@ -30,6 +32,20 @@ class VectorSearchSpec extends AnyFunSuite {
 
   test("knnSingle clamps k to corpus size") {
     assert(VectorSearch.knnSingle(corpus.limit(3), randVec(7), 10).count() == 3)
+  }
+
+  test("knnSingle with a duplicated id: at most k rows, each scored by its own embedding") {
+    val q = randVec(999)
+    def dot(v: Array[Float]) = v.zip(q).map { case (a, b) => a * b.toDouble }.sum
+    // the best and the fourth-best vector share id 7
+    val ranked = (0 until 100).map(randVec(_)).sortBy(v => -dot(v))
+    val dup = Seq((7L, ranked(0)), (7L, ranked(3)), (1L, ranked(1)), (2L, ranked(2))) ++
+      (4 until 20).map(i => (100L + i, ranked(i)))
+    val got = VectorSearch.knnSingle(dup.toDF("doc_id", "embedding"), q, 3)
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
+    assert(got.length == 3)
+    got.foreach { case (_, v, s) => assert(s == dot(v)) }
+    assert(got.map(_._1).toSeq == Seq(7L, 1L, 2L))
   }
 
   test("knnBatch and knnBatchAggregated agree") {
